@@ -21,12 +21,6 @@ def fingerprint(col) -> Column:
     return F.md5(normalize(col))
 
 
-def seeded_hash_hex(col, seed: int) -> Column:
-    """Seeded md5 as a hex string: md5(seed || ':' || value)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.concat(F.lit(f"{seed}:"), c))
-
-
 def hex32_to_long(hex_col: Column) -> Column:
     """First 8 hex chars -> non-negative 32-bit value as a long.
 
@@ -46,7 +40,3 @@ def hex_prefix_to_long(hex_col: Column, n_hex: int) -> Column:
         raise ValueError(f"n_hex must be in [1, 15], got {n_hex}")
     return F.conv(F.substring(hex_col, 1, n_hex), 16, 10).cast("long")
 
-
-def seeded_hash_long(col, seed: int) -> Column:
-    """Seeded 32-bit integer hash (as long) — the MinHash ingredient."""
-    return hex32_to_long(seeded_hash_hex(col, seed))

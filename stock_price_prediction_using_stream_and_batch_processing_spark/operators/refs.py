@@ -53,13 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .snapshots import (
     ConcurrentCommitError,
-    _attach_blooms,
-    _carry_fence,
+    _COPY,
     _enforce_constraints,
     _meta_entries,
+    _new_snap,
     _publish,
-    _scan_commit_stats,
     _snap_path,
+    _stage_commit,
     build_append_snap,
     current_version,
     publish_with_rebase,
@@ -68,32 +68,6 @@ from .snapshots import (
 )
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,64}$")
-
-# content keys that define WHAT a snapshot version contains (vs. its
-# position in history / writer fences) — the set rollback restores
-_CONTENT_KEYS = (
-    "files",
-    "manifests",
-    "stats_cols",
-    "bloom_cols",
-    "schema",
-    "schema_evolved",
-    "delete_files",
-    # positional deletes are content exactly like equality deletes:
-    # omitting them here made rollback/branch resurrect positionally-
-    # deleted rows while equality-deleted ones stayed dead (r12 ADVICE)
-    "pos_delete_files",
-    # the partition spec interprets every entry's pv tokens — a
-    # rollback across a spec change must restore the spec its restored
-    # files were written under, not inherit the head's
-    "partition_by",
-    "constraints",
-    # the column-mapping layer is content: a rollback/branch across a
-    # rename must keep reading pre-rename files, and the dropped-name
-    # shadow set guards resurrection exactly as on main
-    "column_mapping",
-    "dropped_columns",
-)
 
 
 def _check_name(name: str) -> str:
@@ -135,8 +109,9 @@ def list_refs(table_dir: str) -> dict:
 def branch_create(table_dir: str, name: str, from_version: int | None = None) -> int:
     """Create branch ``name`` from main version ``from_version``
     (default: current). Pure metadata — branch v1 is a copy of the
-    base snapshot's content, published atomically into the branch's
-    own snapshot line; an existing branch refuses. Returns the base
+    base snapshot's content (every table property but the writer
+    fences, like a clone), published atomically into the branch's own
+    snapshot line; an existing branch refuses. Returns the base
     version."""
     bdir = branch_dir(table_dir, name)
     base = current_version(table_dir) if from_version is None else from_version
@@ -144,21 +119,11 @@ def branch_create(table_dir: str, name: str, from_version: int | None = None) ->
         meta = read_snapshot_meta(table_dir, base)  # loud if expired/absent
     else:
         meta = {"files": []}
-    snap = {k: meta[k] for k in _CONTENT_KEYS if k in meta}
-    if "manifests" not in snap:
-        snap.setdefault("files", [])
-    snap.update({"version": 1, "parent": 0, "branch": name, "base_version": base})
     try:
-        _publish(bdir, 1, snap)
+        _publish(bdir, 1, _new_snap(0, meta, kind=_COPY, branch=name, base_version=base))
     except ConcurrentCommitError:
         raise ValueError(f"branch {name!r} already exists under {table_dir}") from None
     return base
-
-
-def branch_base_version(table_dir: str, name: str) -> int:
-    """The main version branch ``name`` was created from (recorded in
-    branch v1 and immutable for the branch's lifetime)."""
-    return read_snapshot_meta(branch_dir(table_dir, name), 1)["base_version"]
 
 
 def branch_head(table_dir: str, name: str) -> int:
@@ -191,50 +156,24 @@ def branch_append(
     fast path: when every requested stats column is declared constant
     (and no constraints/blooms need a data pass), per-file entries come
     from parquet footers — zero Spark jobs for the stats step."""
-    import uuid
-
-    from .snapshots import _entries_from_footers
-
     bdir = branch_dir(table_dir, name)
     head_meta = read_snapshot_meta(bdir, branch_head(table_dir, name))
     stats_cols = stats_cols or []
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
-    df.write.parquet(commit_dir)
-    # EMPTY staged append (zero part files): publish a files-less
-    # branch commit — same contract as snapshot_append's, so a fenced
-    # nightly transaction with no rows still advances its fence
-    has_files = any(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(commit_dir)
-        for f in fs
+    # branches inherit the base's CHECK constraints at create; staged
+    # rows must satisfy them — a WAP audit should never be the first
+    # place a declared invariant gets checked. An EMPTY staged append
+    # publishes a files-less branch commit, like snapshot_append's.
+    _, entries = _stage_commit(
+        spark, table_dir, df, stats_cols, bloom_cols,
+        constraints=head_meta.get("constraints"), const_stats=const_stats,
     )
-    cons = head_meta.get("constraints") or {}
-    if has_files and cons:
-        # branches inherit the base's CHECK constraints at create;
-        # staged rows must satisfy them — a WAP audit should never be
-        # the first place a declared invariant gets checked
-        _enforce_constraints(spark, cons, spark.read.parquet(commit_dir), commit_dir)
-    if not has_files:
-        entries = []
-    elif (
-        const_stats is not None
-        and set(stats_cols) <= set(const_stats)
-        and not cons
-        and not bloom_cols
-    ):
-        entries = _entries_from_footers(commit_dir, stats_cols, const_stats)
-    else:
-        entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-        _attach_blooms(spark, commit_dir, entries, bloom_cols or [])
     schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
 
     def make_snap(parent: int, meta: dict) -> dict:
-        snap = build_append_snap(
+        return build_append_snap(
             table_dir, parent, meta, entries, stats_cols, bloom_cols, inline_max,
-            schema=schema, merge_schema=merge_schema,
+            schema=schema, merge_schema=merge_schema, branch=name,
         )
-        snap["branch"] = name
-        return snap
 
     return publish_with_rebase(bdir, make_snap)
 
@@ -334,7 +273,7 @@ def branch_publish(
     schema = head_meta.get("schema")
 
     def make_snap(parent: int, meta: dict) -> dict:
-        snap = build_append_snap(
+        return build_append_snap(
             table_dir,
             parent,
             meta,
@@ -343,10 +282,9 @@ def branch_publish(
             bloom_cols=head_meta.get("bloom_cols"),
             schema=schema,
             merge_schema=merge_schema,
+            wap_published_branch=name,
+            wap_base_version=base,
         )
-        snap["wap_published_branch"] = name
-        snap["wap_base_version"] = base
-        return snap
 
     v = publish_with_rebase(table_dir, make_snap)
     if drop:
@@ -431,9 +369,8 @@ def snapshot_rollback(table_dir: str, to_version: int) -> int:
             f"cannot roll back to version {to_version}: snapshot expired or never "
             f"existed under {table_dir}"
         ) from None
-    cur_meta = read_snapshot_meta(table_dir, cur)
-    snap = {k: old[k] for k in _CONTENT_KEYS if k in old}
-    snap.update({"version": cur + 1, "parent": cur, "rollback_of": to_version})
-    _carry_fence(snap, cur_meta)
-    _publish(table_dir, cur + 1, snap)
+    # the restored version's content, the head's fences (the carry
+    # policy's rollback column, snapshots._PROPERTIES)
+    head = read_snapshot_meta(table_dir, cur)
+    _publish(table_dir, cur + 1, _new_snap(cur, old, head=head, rollback_of=to_version))
     return cur + 1

@@ -320,7 +320,10 @@ def _cell_threshold_pairs(
     which Spark's NaN-greatest comparison semantics would have PASSED
     through the >= filter — an accident of ordering semantics, not a
     contract; the matmul path refuses the degenerate input loudly
-    (same posture as ``threshold_pairs_matrix``, judge ADVICE r16)."""
+    (same posture as ``threshold_pairs_matrix``, judge ADVICE r16). A
+    NULL id beside a non-NULL embedding raises too, naming the cell:
+    pairs are ordered ``id_a < id_b``, which NULL has no place in (it
+    used to surface as an opaque TypeError from the ordering mask)."""
     import pandas as pd  # noqa: F811 — resolves via __globals__ on executors
 
     id_type = cell.schema[id_col].dataType.simpleString()
@@ -333,6 +336,13 @@ def _cell_threshold_pairs(
         keep = [i for i, v in enumerate(vals) if v is not None]
         if len(keep) < 2:
             return empty
+        null_ids = int(pdf[id_col].isna().to_numpy()[keep].sum())
+        if null_ids:
+            raise ValueError(
+                f"semantic_dedup: NULL {id_col} in cell "
+                f"{cell_col}={pdf[cell_col].iloc[0]} ({null_ids} such row(s)) — "
+                "pairs are ordered by id; drop or assign ids before deduplicating"
+            )
         ids = pdf[id_col].to_numpy()[keep]
         dims = {len(vals[i]) for i in keep}
         if len(dims) > 1:

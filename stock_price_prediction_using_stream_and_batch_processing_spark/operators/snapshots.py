@@ -393,6 +393,187 @@ def _spec_source_cols(partition_by: list[str]) -> list[str]:
     return seen
 
 
+def _stage_commit(
+    spark: SparkSession,
+    table_dir: str,
+    df: DataFrame,
+    stats_cols: list[str],
+    bloom_cols: list[str] | None = None,
+    partition_by: list[str] | None = None,
+    constraints: dict | None = None,
+    const_stats: dict | None = None,
+) -> tuple[str, list[dict]]:
+    """The driver-side staging every data-writing commit runs before
+    its publish, returning ``(commit_dir, entries)``: write ``df``
+    under a fresh commit dir (invisible until a snapshot references
+    it), refuse NEW rows violating ``constraints`` (staging removed),
+    then per-file entries — from the parquet footers plus the declared
+    constants when ``const_stats`` covers every stats column and no
+    constraint, bloom or partition spec needs a data pass (zero Spark
+    jobs), else from the stats scan plus blooms and partition values.
+
+    A write that leaves no parquet files (an empty nightly batch)
+    stages no entries: the caller still publishes, because the version
+    — and a fenced writer's batch fence — must advance so a replay of
+    the empty batch stays idempotent (the Delta txn semantics).
+    Scanning the empty dir would throw UNABLE_TO_INFER_SCHEMA
+    instead."""
+    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
+    _write_commit_files(df, commit_dir, partition_by)
+    if not _visible_parquet_paths(commit_dir):
+        return commit_dir, []
+    if constraints:
+        _enforce_constraints(spark, constraints, spark.read.parquet(commit_dir), commit_dir)
+    if (
+        const_stats is not None
+        and set(stats_cols) <= set(const_stats)
+        and not constraints
+        and not bloom_cols
+        and not partition_by
+    ):
+        return commit_dir, _entries_from_footers(commit_dir, stats_cols, const_stats)
+    entries = _scan_commit_stats(spark, commit_dir, stats_cols)
+    _attach_blooms(spark, commit_dir, entries, bloom_cols or [])
+    _attach_pv(entries, partition_by)
+    return commit_dir, entries
+
+
+# Commit classes of the carry policy, and where a rollback reads each
+# property (the version it restores, the current head, or the restored
+# version's falling back to the head's).
+_REWRITE, _COPY = "rewrite", "copy"
+_TARGET, _HEAD, _TARGET_ELSE_HEAD = "target", "head", "target, else head"
+
+_PROPERTIES = (
+    # key                dropped by    a rollback reads it from
+    ("schema",           (),           _TARGET),
+    ("schema_evolved",   (_REWRITE,),  _TARGET),
+    ("partition_by",     (),           _TARGET_ELSE_HEAD),
+    ("constraints",      (),           _TARGET),
+    ("delete_files",     (_REWRITE,),  _TARGET),
+    ("pos_delete_files", (_REWRITE,),  _TARGET),
+    ("column_mapping",   (_REWRITE,),  _TARGET),
+    ("dropped_columns",  (_REWRITE,),  _TARGET),
+    ("ndv_m",            (),           _TARGET_ELSE_HEAD),
+    ("last_batches",     (_COPY,),     _HEAD),
+    ("last_batch_id",    (_COPY,),     _HEAD),
+)
+"""THE CARRY POLICY — the table properties snapshot v+1 inherits from
+v. :func:`_new_snap` is its only reader; a commit names just the keys
+it sets or removes. A property absent (or null) in v stays absent.
+
+Commit classes: every commit carries every row unless its class drops
+it. ``rewrite`` is a FULL rewrite (:func:`snapshot_compact` without
+``small_max_rows``, the snapshot sink's full-table overwrite). ``copy``
+seeds a new snapshot line from a version (:func:`snapshot_clone`,
+``refs.branch_create``). ``refs.snapshot_rollback`` is an ordinary
+commit over the RESTORED version, except for the last column.
+
+- ``schema`` — set by appends and merges that evolve it
+  (``merge_schema``), ADD/RENAME/DROP COLUMN, compaction and the
+  sink's overwrite (which write every file under it). Never dropped.
+- ``schema_evolved`` — set by the commits that evolve the schema; the
+  readers' mergeSchema-and-project flag. Dropped by full rewrites
+  (every file is rewritten under the declared schema) and by a MERGE
+  that rewrote every file without evolving the schema itself.
+- ``partition_by`` — set by partitioned appends, the sink and dynamic
+  overwrite. Never dropped: a maintenance commit that lost the spec
+  would turn the next dynamic-partition overwrite into a full-table
+  refusal. It interprets every entry's pv tokens, so a rollback
+  restores the spec its restored files were written under (keeping
+  the head's when the restored version had none).
+- ``constraints`` — set by ADD/DROP CONSTRAINT (dropping the last one
+  removes the key). Never dropped otherwise: a commit that lost them
+  would silently stop enforcement.
+- ``delete_files`` / ``pos_delete_files`` — the live equality and
+  positional deletes, set by the two DELETE verbs. Every commit that
+  keeps parent files must carry them or deleted rows resurrect;
+  positional deletes are content exactly like equality ones (omitting
+  them made rollback/branch resurrect positionally-deleted rows, r12
+  ADVICE). Entries whose referenced files were all rewritten away drop
+  lazily at read time, so the carry is verbatim. Full rewrites drop
+  both: their read applied the deletes, so the rewrite materialized
+  them.
+- ``column_mapping`` / ``dropped_columns`` — rename sources and the
+  dropped-name shadow set, set by RENAME/DROP COLUMN (a drop that
+  empties the mapping removes it). Every commit that keeps pre-rename
+  files must carry them (readers coalesce both generations; the shadow
+  set refuses resurrecting pre-drop bytes). Full rewrites drop them:
+  rewritten files carry declared names only.
+- ``ndv_m`` — the ANALYZE modulus, set by :func:`snapshot_analyze`.
+  Never dropped: losing it on an append would make :func:`table_ndv`
+  read "never analyzed" right after new files arrive, exactly when the
+  incremental re-analyze needs the old partials to still merge — and a
+  clone or branch that lost it could never be answered again (every
+  copied entry already holds partials, so re-analyzing scans nothing).
+- ``last_batches`` — the per-writer epoch fences (r12), advanced by
+  fenced appends and merges and by the streaming sink. Every commit
+  must carry them: a maintenance append/compact/merge interleaved with
+  a crashed stream would otherwise publish a version without the
+  fence, and the stream's replayed batch would double-append (r11).
+  A rollback takes the HEAD's, the newest the table has seen, so it
+  can never re-open a replay. Copies drop them (the Delta rule:
+  application transaction identities do not transfer to clones).
+- ``last_batch_id`` — the pre-r12 global fence, carried so old tables
+  keep their protection, but ONLY while no per-writer map exists: once
+  the format is upgraded it would keep fencing every OTHER writer's
+  early batches forever (r12). The sink removes it when it upgrades.
+
+Beside the rows: ``stats_cols``/``bloom_cols`` default to the parent's,
+and ``files``/``manifests`` are ONE unit — carried verbatim unless the
+commit passes new entries, which replace both."""
+
+_PROPERTY_KEYS = {"stats_cols", "bloom_cols", "files", "manifests"} | {
+    key for key, _, _ in _PROPERTIES
+}
+
+# A builder argument with this value removes the key from v+1.
+_DROP = object()
+
+
+def _new_snap(
+    parent: int, meta: dict, kind: str = "commit", head: dict | None = None, **props
+) -> dict:
+    """THE snapshot builder: version ``parent + 1`` over ``meta``, with
+    the carry policy (:data:`_PROPERTIES`) for commit class ``kind``
+    applied, then ``props`` — the keys this commit sets. A property
+    passed as ``None`` is left to the carry policy; any other key is
+    written as given; :data:`_DROP` removes a key. ``head`` (default
+    ``meta``) is the current head a rollback over ``meta`` reads its
+    fences from."""
+    head = meta if head is None else head
+    snap = {
+        "version": parent + 1,
+        "parent": parent,
+        "stats_cols": meta.get("stats_cols", []),
+        "bloom_cols": _snapshot_bloom_cols(meta),
+    }
+    if props.get("files") is None and props.get("manifests") is None:
+        snap.update((k, meta[k]) for k in ("files", "manifests") if k in meta)
+    for key, dropped_by, source in _PROPERTIES:
+        if kind in dropped_by or (key == "last_batch_id" and head.get("last_batches")):
+            continue
+        value = (head if source == _HEAD else meta).get(key)
+        if value is None and source == _TARGET_ELSE_HEAD:
+            value = head.get(key)
+        if value is not None:
+            snap[key] = value
+    for key, value in props.items():
+        if value is _DROP:
+            snap.pop(key, None)
+        elif value is not None or key not in _PROPERTY_KEYS:
+            snap[key] = value
+    return snap
+
+
+def _fences_after(meta: dict, writer_id: str | None, batch_id: int | None) -> dict | None:
+    """The parent's per-writer fence map with ``writer_id`` advanced to
+    ``batch_id`` — None for an unfenced commit (the map carries)."""
+    if writer_id is None:
+        return None
+    return {**(meta.get("last_batches") or {}), writer_id: batch_id}
+
+
 def snapshot_append(
     spark: SparkSession,
     table_dir: str,
@@ -468,33 +649,10 @@ def snapshot_append(
             ).get(writer_id)
             if fence is not None and batch_id <= fence:
                 return 0
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
-    _write_commit_files(df, commit_dir, partition_by)
-    # EMPTY append (a nightly batch with no rows): the write leaves no
-    # parquet files — publish a files-less commit anyway, because the
-    # version (and, when fenced, the writer's batch fence) must still
-    # advance so a crash-replay of the empty batch stays idempotent
-    # (the Delta txn semantics). Scanning the empty dir would throw
-    # UNABLE_TO_INFER_SCHEMA instead.
-    has_files = bool(_visible_parquet_paths(commit_dir))
-    if has_files:
-        cons = table_constraints(table_dir)
-        if cons:
-            _enforce_constraints(spark, cons, spark.read.parquet(commit_dir), commit_dir)
-        if (
-            const_stats is not None
-            and set(stats_cols) <= set(const_stats)
-            and not cons
-            and not bloom_cols
-            and not partition_by
-        ):
-            entries = _entries_from_footers(commit_dir, stats_cols, const_stats)
-        else:
-            entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-            _attach_blooms(spark, commit_dir, entries, bloom_cols or [])
-            _attach_pv(entries, partition_by)
-    else:
-        entries = []
+    commit_dir, entries = _stage_commit(
+        spark, table_dir, df, stats_cols, bloom_cols, partition_by,
+        table_constraints(table_dir), const_stats,
+    )
     schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
 
     def make_snap(parent: int, meta: dict) -> dict | None:
@@ -507,19 +665,12 @@ def snapshot_append(
 
                 shutil.rmtree(commit_dir, ignore_errors=True)
                 return None
-        snap = build_append_snap(
+        # the fence advances atomically with the data
+        return build_append_snap(
             table_dir, parent, meta, entries, stats_cols, bloom_cols, inline_max,
-            schema=schema, merge_schema=merge_schema,
+            schema=schema, merge_schema=merge_schema, partition_by=partition_by,
+            last_batches=_fences_after(meta, writer_id, batch_id),
         )
-        if partition_by is not None:
-            snap["partition_by"] = partition_by
-        if writer_id is not None:
-            # advance THIS writer's fence atomically with the data
-            # (_carry_fence in the builder preserved other writers')
-            fences = dict(snap.get("last_batches") or {})
-            fences[writer_id] = batch_id
-            snap["last_batches"] = fences
-        return snap
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -534,10 +685,13 @@ def build_append_snap(
     inline_max: int | None = None,
     schema: list[list[str]] | None = None,
     merge_schema: bool = False,
+    **props,
 ) -> dict:
-    """Assemble an APPEND snapshot against ``meta`` — the one builder
-    shared by :func:`snapshot_append` and the streaming sink's commit
-    (sources/snapshot_sink.py), so both speak the identical format.
+    """Assemble an APPEND snapshot against ``meta`` — shared by
+    :func:`snapshot_append`, the branch verbs (operators/refs.py) and
+    the streaming sink's commits (sources/snapshot_sink.py), so all
+    speak the identical format. ``props`` pass through to
+    :func:`_new_snap` (the keys the caller's commit sets).
 
     Mixed-stats commits are legal: the snapshot's top-level
     stats_cols/bloom_cols are the UNION across the history, and entries
@@ -554,51 +708,32 @@ def build_append_snap(
     conversion shard file — harmless, unreferenced, and metadata-sized;
     retention ignores unreferenced shards the same way it ignores
     aborted commits' data files)."""
-    snap = {
-        "version": parent + 1,
-        "parent": parent,
-        "stats_cols": _merged_cols(meta.get("stats_cols"), stats_cols),
-        "bloom_cols": _merged_cols(meta.get("bloom_cols"), bloom_cols),
-    }
     new_schema, evolved = _merged_schema(meta, schema, merge_schema)
-    if new_schema is not None:
-        snap["schema"] = new_schema
-    if evolved:
-        snap["schema_evolved"] = True
     # data SEQUENCE NUMBER (Iceberg): the commit that added each file.
     # Equality deletes apply only to files with LOWER seq, so rows
     # re-inserted after a delete are never retro-deleted. Re-stamped on
     # every rebase attempt (the seq is the actual publish version).
     for e in entries:
         e["seq"] = parent + 1
-    _carry_deletes(snap, meta)
     if "manifests" in meta:
-        snap["manifests"] = meta["manifests"] + (
-            [_write_manifest(table_dir, entries)] if entries else []
-        )
+        payload = {
+            "manifests": meta["manifests"]
+            + ([_write_manifest(table_dir, entries)] if entries else [])
+        }
     else:
         # inline-vs-shard selection shared with compact/manifest
         # compaction — ONE copy of the format rule
-        snap.update(
-            _entries_payload(table_dir, meta.get("files", []) + entries, inline_max)
-        )
-    _carry_constraints(snap, meta)
-    _carry_mapping(snap, meta)
-    _carry_fence(snap, meta)
-    return snap
-
-
-def _carry_deletes(snap: dict, parent_meta: dict) -> None:
-    """Carry live equality-delete AND positional-delete files forward —
-    every commit except a full rewrite (compaction, which MATERIALIZES
-    them) must keep them, or deleted rows in carried data files would
-    resurrect. Positional entries whose referenced files were all
-    rewritten away are dropped lazily at read time (path match), so
-    the carry is verbatim."""
-    if parent_meta.get("delete_files"):
-        snap["delete_files"] = parent_meta["delete_files"]
-    if parent_meta.get("pos_delete_files"):
-        snap["pos_delete_files"] = parent_meta["pos_delete_files"]
+        payload = _entries_payload(table_dir, meta.get("files", []) + entries, inline_max)
+    return _new_snap(
+        parent,
+        meta,
+        stats_cols=_merged_cols(meta.get("stats_cols"), stats_cols),
+        bloom_cols=_merged_cols(meta.get("bloom_cols"), bloom_cols),
+        schema=new_schema,
+        schema_evolved=True if evolved else None,
+        **payload,
+        **props,
+    )
 
 
 def snapshot_overwrite_partitions(
@@ -642,14 +777,9 @@ def snapshot_overwrite_partitions(
     stats_cols = stats_cols if stats_cols is not None else meta0.get("stats_cols", [])
     stats_cols = _merged_cols(_spec_source_cols(spec), stats_cols)
     bloom_cols = bloom_cols if bloom_cols is not None else _snapshot_bloom_cols(meta0)
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
-    _write_commit_files(df, commit_dir, spec)
-    cons = table_constraints(table_dir)
-    if cons:
-        _enforce_constraints(spark, cons, spark.read.parquet(commit_dir), commit_dir)
-    entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-    _attach_blooms(spark, commit_dir, entries, bloom_cols or [])
-    _attach_pv(entries, spec)
+    _, entries = _stage_commit(
+        spark, table_dir, df, stats_cols, bloom_cols, spec, table_constraints(table_dir)
+    )
     names = [s["name"] for s in _parse_partition_spec(spec)]
     new_pvs = {_pv_key(e["pv"], names) for e in entries}
     base_paths = {e["path"] for e in _meta_entries(meta0)}
@@ -685,28 +815,21 @@ def snapshot_overwrite_partitions(
             kept.append(e)
         for e in entries:
             e["seq"] = parent + 1
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": _merged_cols(meta.get("stats_cols"), stats_cols),
-            "bloom_cols": _merged_cols(meta.get("bloom_cols"), bloom_cols),
-            "schema": meta.get("schema") or schema,
-            "partition_by": spec,
+        return _new_snap(
+            parent,
+            meta,
+            stats_cols=_merged_cols(meta.get("stats_cols"), stats_cols),
+            bloom_cols=_merged_cols(meta.get("bloom_cols"), bloom_cols),
+            schema=meta.get("schema") or schema,
+            partition_by=spec,
             # a REWRITE class commit for the CDC contract: old rows of
             # the replaced partitions vanished without per-row deltas
-            "overwrite": {
+            overwrite={
                 "partitions": sorted(list(k) for k in new_pvs),
                 "files_replaced": replaced,
             },
             **_entries_payload(table_dir, kept + entries, inline_max),
-        }
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -888,30 +1011,14 @@ def snapshot_delete(
         schema = meta.get("schema")
         if schema is not None and col not in [c for c, _ in schema]:
             raise ValueError(f"delete column {col!r} not in table schema")
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "delete": True,
-            "delete_files": list(meta.get("delete_files") or [])
+        return _new_snap(
+            parent,
+            meta,
+            delete=True,
+            delete_files=list(meta.get("delete_files") or [])
             + [{"dir": del_dir, "col": col, "n_keys": n_keys, "seq": parent + 1}],
-        }
-        if meta.get("pos_delete_files"):
-            snap["pos_delete_files"] = meta["pos_delete_files"]
-        if changes_dir is not None:
-            snap["change_feed_dir"] = changes_dir
-        if schema is not None:
-            snap["schema"] = schema
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+            change_feed_dir=changes_dir or _DROP,
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -1007,30 +1114,14 @@ def snapshot_position_delete(
                 f"rewritten concurrently under {table_dir}; re-run the delete "
                 "against the current version"
             )
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "delete": True,
-            "pos_delete_files": list(meta.get("pos_delete_files") or [])
+        return _new_snap(
+            parent,
+            meta,
+            delete=True,
+            pos_delete_files=list(meta.get("pos_delete_files") or [])
             + [{"dir": del_dir, "n_rows": n, "paths": touched}],
-        }
-        if meta.get("delete_files"):
-            snap["delete_files"] = meta["delete_files"]
-        if changes_dir is not None:
-            snap["change_feed_dir"] = changes_dir
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+            change_feed_dir=changes_dir or _DROP,
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -1099,24 +1190,13 @@ def snapshot_analyze(
                     # — MARKED analyzed, so the next run skips them
                     e[f"ndv_{c}"] = pm.get(c, [])
             entries2.append(e)
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "ndv_m": m,
-            "analyze": {"cols": sorted(cols), "files_scanned": len(todo)},
+        return _new_snap(
+            parent,
+            meta,
+            ndv_m=m,
+            analyze={"cols": sorted(cols), "files_scanned": len(todo)},
             **_entries_payload(table_dir, entries2, None),
-        }
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        )
 
     v = publish_with_rebase(table_dir, make_snap)
     return {"version": v, "files_scanned": len(todo)}
@@ -1265,14 +1345,10 @@ def snapshot_update(
     stats_cols = meta0.get("stats_cols", [])
     if spec:
         stats_cols = _merged_cols(_spec_source_cols(spec), stats_cols)
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
-    _write_commit_files(updated, commit_dir, spec)
-    cons = meta0.get("constraints") or {}
-    if cons:
-        _enforce_constraints(spark, cons, spark.read.parquet(commit_dir), commit_dir)
-    new_entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-    _attach_pv(new_entries, spec)
-    _attach_blooms(spark, commit_dir, new_entries, _snapshot_bloom_cols(meta0))
+    _, new_entries = _stage_commit(
+        spark, table_dir, updated, stats_cols, _snapshot_bloom_cols(meta0), spec,
+        meta0.get("constraints"),
+    )
     changes_dir = None
     if change_feed:
         pre = base.where(cond).withColumn("_change_type", F.lit("update_preimage"))
@@ -1305,25 +1381,14 @@ def snapshot_update(
         cur_carried = [e for e in _meta_entries(meta) if e["path"] not in touched_paths]
         for e in new_entries:
             e["seq"] = parent + 1
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": _merged_cols(meta.get("stats_cols"), stats_cols),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "update": {"files_rewritten": len(touched_entries), "rows": n_updated},
+        return _new_snap(
+            parent,
+            meta,
+            stats_cols=_merged_cols(meta.get("stats_cols"), stats_cols),
+            update={"files_rewritten": len(touched_entries), "rows": n_updated},
+            change_feed_dir=changes_dir or _DROP,
             **_entries_payload(table_dir, cur_carried + new_entries, None),
-        }
-        if changes_dir is not None:
-            snap["change_feed_dir"] = changes_dir
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        )
 
     v = publish_with_rebase(table_dir, make_snap)
     return {
@@ -1486,23 +1551,13 @@ def snapshot_add_column(table_dir: str, name: str, ddl_type: str) -> int:
                 "mapping cannot disambiguate them) — compact the table first "
                 "to purge the shadow, then add the column"
             )
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "schema": schema + [[name, ddl_type]],
-            "schema_evolved": True,
-            "add_column": name,
-        }
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(
+            parent,
+            meta,
+            schema=schema + [[name, ddl_type]],
+            schema_evolved=True,
+            add_column=name,
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -1590,27 +1645,6 @@ def publish_with_rebase(table_dir: str, make_snap, max_attempts: int = 50) -> in
     )
 
 
-def _carry_constraints(snap: dict, parent_meta: dict) -> None:
-    """Carry the table's CHECK constraints forward — like fences, a
-    table property every commit must preserve or maintenance commits
-    would silently drop enforcement."""
-    if parent_meta.get("constraints"):
-        snap["constraints"] = parent_meta["constraints"]
-
-
-def _carry_mapping(snap: dict, parent_meta: dict) -> None:
-    """Carry the column-mapping layer (rename sources) and the
-    dropped-column shadow set forward — table properties every commit
-    that keeps parent files must preserve, exactly like constraints
-    and fences. A FULL rewrite (compaction, full-table overwrite)
-    deliberately does not call this: rewritten files carry declared
-    names only, so the mapping is spent and dropped shadows are gone."""
-    if parent_meta.get("column_mapping"):
-        snap["column_mapping"] = parent_meta["column_mapping"]
-    if parent_meta.get("dropped_columns"):
-        snap["dropped_columns"] = parent_meta["dropped_columns"]
-
-
 def table_constraints(table_dir: str) -> dict:
     """{name: boolean SQL expr} CHECK constraints of the current
     snapshot (empty for an empty table)."""
@@ -1694,25 +1728,7 @@ def snapshot_set_constraint(
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
         cons[name] = expr
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "constraints": cons,
-            "add_constraint": name,
-        }
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_deletes(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(parent, meta, constraints=cons, add_constraint=name)
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -1725,61 +1741,9 @@ def snapshot_drop_constraint(table_dir: str, name: str) -> int:
         if name not in cons:
             raise ValueError(f"no constraint {name!r} on {table_dir}")
         del cons[name]
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "drop_constraint": name,
-        }
-        if cons:
-            snap["constraints"] = cons
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_deletes(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(parent, meta, constraints=cons or _DROP, drop_constraint=name)
 
     return publish_with_rebase(table_dir, make_snap)
-
-
-def _carry_fence(snap: dict, parent_meta: dict) -> None:
-    """Every non-sink commit must CARRY the streaming sink's epoch
-    fences forward: a maintenance append/compact/merge interleaved
-    with a crashed stream would otherwise publish a current version
-    without the fence, and the stream's replayed batch would
-    double-append (found in the r11 self-review). Fences are the
-    per-writer map ``last_batches`` (r12); the legacy global
-    ``last_batch_id`` is carried too so pre-r12 tables keep their
-    protection until a sink commit upgrades the format. The legacy key
-    is carried ONLY while no per-writer map exists: once the format is
-    upgraded it must be dropped, or it would keep fencing every OTHER
-    writer's early batches forever (round-12 self-review).
-
-    Also carries the table's PARTITION SPEC (``partition_by``) — the
-    other cross-commit property every builder must preserve; a
-    maintenance commit dropping it would silently turn the next
-    dynamic-partition overwrite into a full-table refusal. A builder
-    that deliberately CHANGES the spec sets ``snap["partition_by"]``
-    before calling this."""
-    if parent_meta.get("last_batches"):
-        snap["last_batches"] = parent_meta["last_batches"]
-    elif parent_meta.get("last_batch_id") is not None:
-        snap["last_batch_id"] = parent_meta["last_batch_id"]
-    if "partition_by" not in snap and parent_meta.get("partition_by"):
-        snap["partition_by"] = parent_meta["partition_by"]
-    # the ANALYZE modulus is a table property too: dropping it on an
-    # append would make table_ndv read "never analyzed" right after
-    # new files arrive — exactly when the incremental re-analyze needs
-    # the old partials to still merge
-    if "ndv_m" not in snap and parent_meta.get("ndv_m") is not None:
-        snap["ndv_m"] = parent_meta["ndv_m"]
 
 
 def snapshot_files(table_dir: str, version: int | None = None) -> list[dict]:
@@ -1975,43 +1939,32 @@ def snapshot_compact(
         )
     else:
         df = df.repartition(target_files)
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
-    _write_commit_files(df, commit_dir, spec)
-    entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-    _attach_blooms(spark, commit_dir, entries, bloom_cols)
-    _attach_pv(entries, spec)
-    # FULL rewrite: the read applied live equality deletes, so they
-    # are MATERIALIZED — delete_files deliberately NOT carried (the
-    # one commit that clears the merge-on-read read tax). PARTIAL
-    # rewrite: deletes still govern the carried files, so they carry.
+    _, entries = _stage_commit(spark, table_dir, df, stats_cols, bloom_cols, spec)
     for e in entries:
         e["seq"] = parent + 1
-    snap = {
-        "version": parent + 1,
-        "parent": parent,
-        "stats_cols": stats_cols,
-        "bloom_cols": bloom_cols,
-        "compaction_of": parent,
-        "clustered_by": cluster_by or None,
-        # a full rewrite materializes the declared schema into EVERY
-        # file, so evolution is over: schema recorded, evolved flag
-        # cleared — readers drop back to the plain-parquet path. A
-        # partial rewrite keeps the flag (carried files may predate
-        # the evolution).
-        "schema": [[f.name, f.dataType.simpleString()] for f in df.schema.fields],
-        **_entries_payload(table_dir, carried_big + entries, inline_max),  # REPLACES
-    }
-    if carried_big:
-        snap["partial_compaction"] = {
+    # FULL rewrite (the "rewrite" class): the read applied live deletes,
+    # so they are MATERIALIZED and not carried — the one commit that
+    # clears the merge-on-read read tax — and the declared schema is in
+    # EVERY file, so evolution is over (flag and mapping dropped,
+    # readers back on the plain-parquet path). PARTIAL rewrite: deletes,
+    # mapping and the flag still govern the carried files, so they carry.
+    snap = _new_snap(
+        parent,
+        parent_meta,
+        kind="commit" if carried_big else _REWRITE,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        compaction_of=parent,
+        clustered_by=cluster_by or None,
+        schema=[[f.name, f.dataType.simpleString()] for f in df.schema.fields],
+        partial_compaction={
             "files_rewritten": len(_meta_entries(parent_meta)) - len(carried_big),
             "files_carried": len(carried_big),
         }
-        if parent_meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        _carry_deletes(snap, parent_meta)
-        _carry_mapping(snap, parent_meta)
-    _carry_constraints(snap, parent_meta)
-    _carry_fence(snap, parent_meta)
+        if carried_big
+        else _DROP,
+        **_entries_payload(table_dir, carried_big + entries, inline_max),  # REPLACES
+    )
     _publish(table_dir, parent + 1, snap)
     return parent + 1
 
@@ -2029,24 +1982,12 @@ def snapshot_compact_manifests(table_dir: str, inline_max: int | None = None) ->
     def make_snap(parent: int, meta: dict):
         if parent == 0:
             raise ValueError(f"nothing to compact under {table_dir}")
-        entries = _meta_entries(meta)
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "manifest_compaction": True,
-            **_entries_payload(table_dir, entries, inline_max),
-        }
-        if meta.get("schema") is not None:
-            snap["schema"] = meta["schema"]
-        if meta.get("schema_evolved"):
-            snap["schema_evolved"] = True
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_mapping(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(
+            parent,
+            meta,
+            manifest_compaction=True,
+            **_entries_payload(table_dir, _meta_entries(meta), inline_max),
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -2616,7 +2557,6 @@ def snapshot_merge(
     merged = base.join(keys, base[key] == F.col("_mk"), "left_anti").unionByName(
         updates, allowMissingColumns=merge_schema
     )
-    commit_dir = os.path.join(table_dir, "data", uuid.uuid4().hex[:12])
     # a partitioned table's MERGE rewrites in the partition layout, so
     # rewritten files keep per-file pv (and with it dynamic-partition
     # overwrite eligibility) instead of silently degrading the table
@@ -2624,19 +2564,14 @@ def snapshot_merge(
     spec = meta.get("partition_by")
     if spec:
         stats_cols = _merged_cols(_spec_source_cols(spec), stats_cols)
-    _write_commit_files(merged, commit_dir, spec)
-    cons = meta.get("constraints") or {}
-    if cons:
-        # violating UPDATE rows refuse here; carried rows re-check
-        # trivially (they satisfied the constraint when they landed)
-        _enforce_constraints(spark, cons, spark.read.parquet(commit_dir), commit_dir)
-    new_entries = _scan_commit_stats(spark, commit_dir, stats_cols)
-    _attach_pv(new_entries, spec)
     # rewritten files get fresh blooms for the snapshot's bloom columns
     # (carried entries keep theirs verbatim) — MERGE must not degrade
-    # point-lookup pruning (ADVICE r11)
+    # point-lookup pruning (ADVICE r11). Violating UPDATE rows refuse
+    # in staging; carried rows satisfied the constraints when they landed.
     bloom_cols = _snapshot_bloom_cols(meta)
-    _attach_blooms(spark, commit_dir, new_entries, bloom_cols)
+    _, new_entries = _stage_commit(
+        spark, table_dir, merged, stats_cols, bloom_cols, spec, meta.get("constraints")
+    )
     version = parent + 1
     changes_dir = None
     if change_feed:
@@ -2683,45 +2618,40 @@ def snapshot_merge(
     # carried files still need the delete files, so they carry forward
     for e in new_entries:
         e["seq"] = version
-    snap = {
-        "version": version,
-        "parent": parent,
-        "stats_cols": stats_cols,
-        "bloom_cols": bloom_cols,
-        "merge": True,
-    }
-    if changes_dir is not None:
-        snap["change_feed_dir"] = changes_dir
-    _carry_deletes(snap, meta)
-    if declared is not None:
-        snap["schema"] = new_declared
-    if (meta.get("schema_evolved") and (carried or carried_shards)) or evolved:
-        # carried files may still predate the declared schema (or, when
-        # this MERGE itself evolved it, they certainly do); a merge
-        # that rewrote EVERYTHING on an unevolved table homogenized it
-        snap["schema_evolved"] = True
     out = {"version": version, "files_rewritten": len(touched_paths)}
     if "manifests" in meta:
-        snap["manifests"] = carried_shards + [
-            _write_manifest(table_dir, chunk)
-            for chunk in _chunks(carried + new_entries, _SHARD_MAX)
-        ]
+        payload = {
+            "manifests": carried_shards
+            + [
+                _write_manifest(table_dir, chunk)
+                for chunk in _chunks(carried + new_entries, _SHARD_MAX)
+            ]
+        }
         out["files_carried"] = len(carried) + sum(
             r["n_files"] for r in carried_shards
         )
         out["shards_carried"] = len(carried_shards)
     else:
-        snap["files"] = carried + new_entries
+        payload = {"files": carried + new_entries}
         out["files_carried"] = len(carried)
-    _carry_constraints(snap, meta)
-    _carry_mapping(snap, meta)
-    _carry_fence(snap, meta)
-    if writer_id is not None:
-        # advance THIS writer's fence on top of the carried map (the
-        # carry preserved other writers' entries and any legacy key)
-        fences = dict(snap.get("last_batches") or {})
-        fences[writer_id] = batch_id
-        snap["last_batches"] = fences
+    snap = _new_snap(
+        parent,
+        meta,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        merge=True,
+        change_feed_dir=changes_dir or _DROP,
+        schema=new_declared,
+        # carried files may still predate the declared schema (or, when
+        # this MERGE itself evolved it, they certainly do); a merge
+        # that rewrote EVERYTHING without evolving homogenized the table
+        schema_evolved=True
+        if (meta.get("schema_evolved") and (carried or carried_shards)) or evolved
+        else _DROP,
+        # advance THIS writer's fence on top of the carried map
+        last_batches=_fences_after(meta, writer_id, batch_id),
+        **payload,
+    )
     _publish(table_dir, version, snap)
     return out
 
@@ -3174,7 +3104,7 @@ def snapshot_clone(
 
     SHALLOW (default): the clone's v1 references the source version's
     data files (and manifest shards, delete files, blooms, stats,
-    schema, partition spec, CHECK constraints) VERBATIM — a pure
+    schema, partition spec, CHECK constraints, NDV modulus) VERBATIM — a pure
     metadata publish, zero data copied, O(metadata) regardless of
     table size. Writes to the clone diverge normally (new files land
     under the CLONE's dir; a compaction deep-copies on write by
@@ -3217,21 +3147,9 @@ def snapshot_clone(
         for name, expr in (meta.get("constraints") or {}).items():
             out = snapshot_set_constraint(spark, dst_dir, name, expr)
         return out
-    snap = {
-        "version": 1,
-        "parent": 0,
-        "stats_cols": meta.get("stats_cols", []),
-        "bloom_cols": _snapshot_bloom_cols(meta),
-        "cloned_from": {"table": src_dir, "version": v},
-    }
-    for k in (
-        "schema", "schema_evolved", "partition_by", "files", "manifests",
-        "delete_files", "pos_delete_files", "constraints",
-        "column_mapping", "dropped_columns",
-    ):
-        if meta.get(k) is not None:
-            snap[k] = meta[k]
-    _publish(dst_dir, 1, snap)
+    _publish(
+        dst_dir, 1, _new_snap(0, meta, kind=_COPY, cloned_from={"table": src_dir, "version": v})
+    )
     return 1
 
 
@@ -3314,25 +3232,14 @@ def snapshot_rename_column(table_dir: str, old: str, new: str) -> int:
         # resolve chained renames to the ORIGINAL physical name
         phys = mapping.pop(old, old)
         mapping[new] = phys
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "schema": [[new if n == old else n, t] for n, t in schema],
-            "schema_evolved": True,
-            "column_mapping": mapping,
-            "rename_column": [old, new],
-        }
-        if meta.get("dropped_columns"):
-            snap["dropped_columns"] = meta["dropped_columns"]
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(
+            parent,
+            meta,
+            schema=[[new if n == old else n, t] for n, t in schema],
+            schema_evolved=True,
+            column_mapping=mapping,
+            rename_column=[old, new],
+        )
 
     return publish_with_rebase(table_dir, make_snap)
 
@@ -3367,24 +3274,14 @@ def snapshot_drop_column(table_dir: str, name: str) -> int:
         for shadow in {name} | ({phys} if phys else set()):
             if shadow not in dropped:
                 dropped.append(shadow)
-        snap = {
-            "version": parent + 1,
-            "parent": parent,
-            "stats_cols": meta.get("stats_cols", []),
-            "bloom_cols": _snapshot_bloom_cols(meta),
-            "schema": [[n, t] for n, t in schema if n != name],
-            "schema_evolved": True,
-            "drop_column": name,
-            "dropped_columns": dropped,
-        }
-        if mapping:
-            snap["column_mapping"] = mapping
-        for k in ("files", "manifests"):
-            if k in meta:
-                snap[k] = meta[k]
-        _carry_deletes(snap, meta)
-        _carry_constraints(snap, meta)
-        _carry_fence(snap, meta)
-        return snap
+        return _new_snap(
+            parent,
+            meta,
+            schema=[[n, t] for n, t in schema if n != name],
+            schema_evolved=True,
+            drop_column=name,
+            dropped_columns=dropped,
+            column_mapping=mapping or _DROP,
+        )
 
     return publish_with_rebase(table_dir, make_snap)

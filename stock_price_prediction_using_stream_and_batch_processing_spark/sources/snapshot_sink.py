@@ -621,8 +621,8 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
                 return None
             # the shared builder handles inline vs SHARDED parents (one
             # new shard per batch past the inline ceiling) and carries
-            # other writers' fences; then advance this writer's.
-            s = snap.build_append_snap(
+            # other writers' fences; this writer's advances on top.
+            return snap.build_append_snap(
                 self.table_dir, parent, meta, entries, self.stats_cols,
                 bloom_cols=self.bloom_cols,
                 inline_max=self.inline_max,
@@ -630,17 +630,14 @@ class SnapshotStreamWriter(DataSourceStreamWriter):
                     [f.name, f.dataType.simpleString()] for f in self.schema.fields
                 ],
                 merge_schema=self.merge_schema,
+                partition_by=self.partition_by or None,
+                last_batches=snap._fences_after(meta, self.writer_id, batchId),
+                # drop the legacy global fence on upgrade: with the
+                # per-writer map present it no longer fences anyone, and
+                # carrying it forever would only invite readers to trust
+                # a stale value (r12 review)
+                last_batch_id=snap._DROP,
             )
-            if self.partition_by:
-                s["partition_by"] = self.partition_by
-            fences[self.writer_id] = batchId
-            s["last_batches"] = fences
-            # drop the legacy global fence on upgrade: with the
-            # per-writer map present it no longer fences anyone, and
-            # carrying it forever would only invite readers to trust a
-            # stale value (r12 review)
-            s.pop("last_batch_id", None)
-            return s
 
         snap.publish_with_rebase(self.table_dir, make_snap)
 
@@ -681,7 +678,8 @@ class SnapshotBatchWriter(SnapshotStreamWriter, DataSourceWriter):
       snapshot references only the staged files, classified as a
       rewrite (``overwrite.full_table``) for the CDC contract, keeping
       CHECK constraints and writer fences but not parent delete files
-      (every file they applied to is replaced). Deliberately
+      or the column mapping (every file they applied to is replaced;
+      the ``rewrite`` class of the store's carry policy). Deliberately
       conservative concurrency: ANY commit that lands between planning
       and publish raises ConcurrentCommitError — replacing the table
       and a concurrent write cannot be ordered without silently
@@ -710,8 +708,8 @@ class SnapshotBatchWriter(SnapshotStreamWriter, DataSourceWriter):
 
         entries = _assemble_entries(messages, self.stats_cols)
         # CHECK constraints bind both modes: appends must honor them,
-        # and an overwrite's REPLACEMENT data must too (the constraint
-        # survives the overwrite via _carry_constraints below). Fast
+        # and an overwrite's REPLACEMENT data must too (constraints
+        # survive every commit, the overwrite included). Fast
         # path: each TASK validated its own staged file executor-side
         # in write() against the constraints captured at plan time and
         # shipped per-constraint violation counts in its commit message
@@ -746,16 +744,14 @@ class SnapshotBatchWriter(SnapshotStreamWriter, DataSourceWriter):
         if not self.overwrite_mode:
 
             def make_append(parent: int, meta: dict):
-                s = snap.build_append_snap(
+                return snap.build_append_snap(
                     self.table_dir, parent, meta, entries, self.stats_cols,
                     bloom_cols=self.bloom_cols,
                     inline_max=self.inline_max,
                     schema=schema_decl,
                     merge_schema=self.merge_schema,
+                    partition_by=self.partition_by or None,
                 )
-                if self.partition_by:
-                    s["partition_by"] = self.partition_by
-                return s
 
             snap.publish_with_rebase(self.table_dir, make_append)
             return
@@ -769,25 +765,23 @@ class SnapshotBatchWriter(SnapshotStreamWriter, DataSourceWriter):
                 )
             for e in entries:
                 e["seq"] = parent + 1
-            s = {
-                "version": parent + 1,
-                "parent": parent,
-                "stats_cols": list(self.stats_cols),
-                "bloom_cols": list(self.bloom_cols),
-                "schema": schema_decl,
-                "overwrite": {
+            # a FULL rewrite: parent delete files and the column mapping
+            # are not carried — they applied to files this commit
+            # replaces wholesale
+            return snap._new_snap(
+                parent,
+                meta,
+                kind=snap._REWRITE,
+                stats_cols=list(self.stats_cols),
+                bloom_cols=list(self.bloom_cols),
+                schema=schema_decl,
+                partition_by=self.partition_by or None,
+                overwrite={
                     "full_table": True,
                     "files_replaced": len(snap._meta_entries(meta)) if parent else 0,
                 },
                 **snap._entries_payload(self.table_dir, entries, self.inline_max),
-            }
-            if self.partition_by:
-                s["partition_by"] = self.partition_by
-            snap._carry_constraints(s, meta)
-            snap._carry_fence(s, meta)
-            # parent delete files NOT carried: they applied to files
-            # this commit replaces wholesale
-            return s
+            )
 
         snap.publish_with_rebase(self.table_dir, make_overwrite)
 

@@ -67,6 +67,26 @@ def test_shallow_clone_carries_mor_deletes_and_constraints(spark, tmp_path):
         snap.snapshot_append(spark, dst, spark.createDataFrame([(-1, 0.0)], "k long, v double"), stats_cols=["k"])
 
 
+def test_clone_and_branch_of_analyzed_table_answer_ndv(spark, tmp_path):
+    """A shallow clone and a branch copy the entries' NDV partials, so
+    they must copy the ANALYZE modulus with them: without ``ndv_m`` the
+    copy reads "never analyzed", and re-analyzing it scans nothing
+    (every entry already has partials) — unanswerable for good."""
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import refs
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    snap.snapshot_append(spark, src, _df(spark, 0, 50), stats_cols=["k"])
+    snap.snapshot_analyze(spark, src, ["k"])
+    want = snap.table_ndv(src, "k")
+    snap.snapshot_clone(spark, src, dst)
+    assert snap.table_ndv(dst, "k") == want
+    refs.branch_create(src, "b")
+    assert snap.table_ndv(refs.branch_dir(src, "b"), "k") == want
+    # and the branch line keeps it through its own commits
+    refs.branch_append(spark, src, "b", _df(spark, 50, 60), stats_cols=["k"])
+    assert snap.read_snapshot_meta(refs.branch_dir(src, "b"), 2)["ndv_m"] == 4096
+
+
 def test_compacting_the_clone_severs_sharing(spark, tmp_path):
     """Deep-copy-on-write: after OPTIMIZE on the clone, source
     maintenance can no longer break it."""

@@ -93,17 +93,26 @@ def test_semi_anti_joins_plan_as_joins(spark):
         assert kind in plan, f"{name}: expected {kind}\n{plan}"
 
 
-def test_no_cartesian_products_anywhere(spark):
+@pytest.fixture(scope="module")
+def executed_plans(spark):
+    """{face: executedPlan string} for every batch face, built ONCE for
+    the whole-corpus plan checks below (streaming faces build their own
+    sources and are skipped)."""
+    return {
+        name: fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in full_query_map().items()
+        if not name.startswith("stream_")
+    }
+
+
+def test_no_cartesian_products_anywhere(executed_plans):
     # A CartesianProduct in any corpus query is an O(|L|x|R|) landmine
     # at scale; every join must be equi, broadcast, or range-bucketed.
-    for name, fn in full_query_map().items():
-        if name.startswith("stream_"):
-            continue
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in executed_plans.items():
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
 
 
-def test_no_python_udf_outside_inference(spark):
+def test_no_python_udf_outside_inference(executed_plans):
     # Everything except the model-inference and mapInPandas multimodal
     # paths must stay JVM-side: no BatchEvalPython (row-at-a-time UDF)
     # anywhere; ArrowEvalPython only in the declared Python-boundary
@@ -117,10 +126,7 @@ def test_no_python_udf_outside_inference(spark):
         # centroid matmul IS the declared boundary (r16)
         "cell_assign_matrix_embeddings",
     }
-    for name, fn in full_query_map().items():
-        if name.startswith("stream_"):
-            continue  # streaming plans build their own sources
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in executed_plans.items():
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
         if name not in allowed_python:
             assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, (

@@ -552,7 +552,9 @@ def test_cell_threshold_pairs_null_and_zero_norm(spark):
     identical to the join form, where cosine(NULL, x) is NULL and fails
     the >= filter; zero-norm embeddings raise loudly naming the id
     (the join form's 0/0 would silently pass via NaN-greatest — an
-    accident of comparison semantics, not a contract; ADVICE r16)."""
+    accident of comparison semantics, not a contract; ADVICE r16), and
+    a NULL id beside a real embedding raises naming the cell instead
+    of an opaque TypeError from the id-ordering mask (ADVICE r17)."""
     cell = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0), (3, None, None), (4, None, 0)],
         "vec_id long, embedding array<double>, _cell int",
@@ -568,6 +570,12 @@ def test_cell_threshold_pairs_null_and_zero_norm(spark):
     )
     with pytest.raises(Exception, match="zero-norm embedding at vec_id=7"):
         similarity._cell_threshold_pairs(z, 0.5, "vec_id", "embedding").collect()
+    n = spark.createDataFrame(
+        [("a", [1.0, 0.0], 3), (None, [1.0, 0.1], 3)],
+        "vec_id string, embedding array<double>, _cell int",
+    )
+    with pytest.raises(Exception, match=r"NULL vec_id in cell _cell=3 \(1 such row"):
+        similarity._cell_threshold_pairs(n, 0.5, "vec_id", "embedding").collect()
 
 
 def test_threshold_pairs_matrix_zero_norm_raises(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
@@ -227,36 +228,205 @@ def test_clustered_compaction_restores_pruning(spark, tmp_path):
     assert got == list(range(1200))
 
 
-def test_maintenance_commits_carry_stream_fence(spark, tmp_path):
-    """r11 review fix: append/compact/merge publish AFTER a streaming
-    sink committed must CARRY last_batch_id, or a crash-replayed batch
-    would double-append past the maintenance commit."""
+# ---------------------------------------------------- the carry policy
+#
+# Every commit verb runs on a parent that holds every table property at
+# once; v+1 must keep each of them, except the ones the verb documents
+# it sets or drops (the property table in operators/snapshots.py).
+
+_CARRIED = (
+    "constraints", "column_mapping", "dropped_columns", "last_batches",
+    "partition_by", "ndv_m", "delete_files", "pos_delete_files",
+)
+_REWRITE_DROPS = {"delete_files", "pos_delete_files", "column_mapping", "dropped_columns"}
+_SINK_SCHEMA = (("k", "long"), ("p", "string"), ("v", "long"), ("x2", "long"))
+
+
+def _sink_writer(d, cols=_SINK_SCHEMA, batch=False, overwrite=False, **opts):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
     from stock_price_prediction_using_stream_and_batch_processing_spark.sources.snapshot_sink import (
+        SnapshotBatchWriter,
         SnapshotStreamWriter,
     )
-    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType(
+        [StructField(c, LongType() if t == "long" else StringType()) for c, t in cols]
+    )
+    o = {"table_dir": d, "stats_cols": "k", "partition_by": "p", **opts}
+    if batch:
+        return SnapshotBatchWriter(o, schema, overwrite)
+    return SnapshotStreamWriter(o, schema)
+
+
+def _rows(spark, lo, hi, p=None):
+    part = F.lit(p) if p is not None else (F.col("id") % 3).cast("string")
+    return spark.range(lo, hi, numPartitions=2).select(
+        F.col("id").alias("k"), part.alias("p"), (F.col("id") * 2).alias("v"),
+        F.col("id").alias("x2"),
+    )
+
+
+@pytest.fixture(scope="module")
+def rich_table(spark, tmp_path_factory):
+    """v1..v9: a stream-fenced, partitioned table with a CHECK
+    constraint, a rename mapping, a dropped-column shadow, NDV partials
+    and live equality + positional deletes."""
+    d = str(tmp_path_factory.mktemp("carry") / "t")
+    w = _sink_writer(d, cols=_SINK_SCHEMA[:3] + (("x", "long"),), writer_id="pipe-a")
+    w.commit([w.write(iter([(1, "0", 2, 1), (2, "1", 4, 2), (3, "0", 6, 3), (4, "1", 8, 4)]))], batchId=7)
+    snap.snapshot_append(
+        spark, d, _rows(spark, 10, 50).withColumnRenamed("x2", "x"),
+        stats_cols=["k"], partition_by=["p"],
+    )
+    snap.snapshot_set_constraint(spark, d, "k_nonneg", "k >= 0")
+    snap.snapshot_rename_column(d, "x", "x2")
+    snap.snapshot_add_column(d, "gone", "int")
+    snap.snapshot_drop_column(d, "gone")
+    snap.snapshot_analyze(spark, d, ["k"])
+    snap.snapshot_delete(spark, d, spark.createDataFrame([(1,)], "k long"), "k")
+    snap.snapshot_position_delete(spark, d, "k = 2")
+    meta = snap.read_snapshot_meta(d, snap.current_version(d))
+    assert all(meta.get(k) for k in _CARRIED), meta
+    return d
+
+
+def _branch_publish(spark, d):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import refs
+
+    refs.branch_create(d, "wap")
+    refs.branch_append(spark, d, "wap", _rows(spark, 300, 303), stats_cols=["k"])
+    return d, refs.branch_publish(d, "wap")
+
+
+def _rollback(spark, d):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import refs
+
+    v = snap.current_version(d)
+    snap.snapshot_append(spark, d, _rows(spark, 400, 402), stats_cols=["k"])
+    return d, refs.snapshot_rollback(d, v)
+
+
+def _clone(spark, d):
+    snap.snapshot_clone(spark, d, d + "_clone")
+    return d + "_clone", 1
+
+
+def _branch(spark, d):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import refs
+
+    refs.branch_create(d, "b")
+    return refs.branch_dir(d, "b"), 1
+
+
+def _sink_commit(d, rows, **kw):
+    w = _sink_writer(d, **kw)
+    msg = w.write(iter(rows))
+    if kw.get("batch"):
+        w.commit([msg])
+    else:
+        w.commit([msg], batchId=0)
+
+
+# verb -> (commit, properties it sets, properties it drops). A commit
+# returns None (published v+1 on the table) or (table_dir, version) when
+# the new snapshot lands elsewhere (clone, branch) or is not v+1.
+_VERBS = {
+    "append": (lambda s, d: snap.snapshot_append(s, d, _rows(s, 100, 104), stats_cols=["k"]), (), ()),
+    "append_fenced": (
+        lambda s, d: snap.snapshot_append(
+            s, d, _rows(s, 100, 104), stats_cols=["k"], writer_id="w2", batch_id=0
+        ),
+        ("last_batches",), (),
+    ),
+    "overwrite_partitions": (
+        lambda s, d: snap.snapshot_overwrite_partitions(s, d, _rows(s, 100, 104, "1")), (), ()
+    ),
+    "delete": (
+        lambda s, d: snap.snapshot_delete(s, d, s.createDataFrame([(11,)], "k long"), "k"),
+        ("delete_files",), (),
+    ),
+    "position_delete": (
+        lambda s, d: snap.snapshot_position_delete(s, d, "k = 12"), ("pos_delete_files",), ()
+    ),
+    "analyze": (lambda s, d: snap.snapshot_analyze(s, d, ["v"]), ("ndv_m",), ()),
+    "update": (lambda s, d: snap.snapshot_update(s, d, "k = 13", {"v": "0"}), (), ()),
+    "add_column": (lambda s, d: snap.snapshot_add_column(d, "extra", "string"), (), ()),
+    "set_constraint": (
+        lambda s, d: snap.snapshot_set_constraint(s, d, "v_nonneg", "v >= 0"), ("constraints",), ()
+    ),
+    "drop_constraint": (
+        lambda s, d: snap.snapshot_drop_constraint(d, "k_nonneg"), (), ("constraints",)
+    ),
+    "compact_manifests": (lambda s, d: snap.snapshot_compact_manifests(d), (), ()),
+    "compact": (lambda s, d: snap.snapshot_compact(s, d, target_files=1), (), _REWRITE_DROPS),
+    "compact_partial": (lambda s, d: snap.snapshot_compact(s, d, small_max_rows=3), (), ()),
+    "merge": (
+        lambda s, d: snap.snapshot_merge(
+            s, d, s.createDataFrame([(14, "2", 0, 14)], "k long, p string, v long, x2 long"), key="k"
+        ),
+        (), (),
+    ),
+    "merge_fenced": (
+        lambda s, d: snap.snapshot_merge(
+            s, d, s.createDataFrame([(14, "2", 0, 14)], "k long, p string, v long, x2 long"),
+            key="k", writer_id="w2", batch_id=0,
+        ),
+        ("last_batches",), (),
+    ),
+    "rename_column": (
+        lambda s, d: snap.snapshot_rename_column(d, "v", "v2"), ("column_mapping",), ()
+    ),
+    "drop_column": (lambda s, d: snap.snapshot_drop_column(d, "v"), ("dropped_columns",), ()),
+    "clone": (_clone, (), ("last_batches",)),
+    "branch_create": (_branch, (), ("last_batches",)),
+    "branch_publish": (_branch_publish, (), ()),
+    "rollback": (_rollback, (), ()),
+    "sink_stream": (
+        lambda s, d: _sink_commit(d, [(500, "0", 1, 1)], writer_id="pipe-b"), ("last_batches",), ()
+    ),
+    "sink_batch_append": (
+        lambda s, d: _sink_commit(d, [(500, "0", 1, 1)], batch=True), (), ()
+    ),
+    "sink_overwrite": (
+        lambda s, d: _sink_commit(d, [(500, "0", 1, 1)], batch=True, overwrite=True),
+        (), _REWRITE_DROPS,
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_VERBS))
+def test_maintenance_commits_carry_stream_fence(spark, tmp_path, rich_table, verb):
+    """Every commit verb carries every table property into v+1 except
+    the ones it sets or drops: the r11 stream fence (a maintenance
+    commit that dropped it re-opened replay double-appends), the CHECK
+    constraints, the rename mapping and dropped-column shadow, the
+    partition spec, the NDV modulus and the live delete files. Full
+    rewrites (compaction, the sink's full overwrite) drop deletes and
+    mapping; a clone or a new branch starts its own fence lineage."""
+    import shutil
 
     d = str(tmp_path / "t")
-    w = SnapshotStreamWriter(
-        {"table_dir": d, "stats_cols": "k", "writer_id": "pipe-a"},
-        StructType([StructField("k", LongType())]),
-    )
-    w.commit([w.write(iter([(1,), (2,)]))], batchId=7)
-    assert snap.read_snapshot_meta(d, 1)["last_batches"] == {"pipe-a": 7}
-    snap.snapshot_append(                         # append (same schema)
-        spark, d, spark.range(10, 20).select(F.col("id").alias("k")), stats_cols=["k"]
-    )
-    assert snap.read_snapshot_meta(d, 2)["last_batches"] == {"pipe-a": 7}
-    snap.snapshot_compact(spark, d, target_files=1)   # compact
-    assert snap.read_snapshot_meta(d, 3)["last_batches"] == {"pipe-a": 7}
-    snap.snapshot_merge(
-        spark, d, spark.createDataFrame([(1,)], "k long"), key="k"
-    )                                             # merge
-    assert snap.read_snapshot_meta(d, 4)["last_batches"] == {"pipe-a": 7}
-    # and the fence still fires through the maintenance commits
-    replay = w.write(iter([(2,)]))
-    w.commit([replay], batchId=7)
-    assert snap.current_version(d) == 4  # replay dropped, no v5
+    shutil.copytree(rich_table, d)
+    v = snap.current_version(d)
+    parent = snap.read_snapshot_meta(d, v)
+    commit, sets, drops = _VERBS[verb]
+    where = commit(spark, d)
+    out_dir, out_v = where if isinstance(where, tuple) else (d, v + 1)
+    assert snap.current_version(out_dir) == out_v
+    child = snap.read_snapshot_meta(out_dir, out_v)
+    for k in _CARRIED:
+        if k in drops:
+            assert k not in child, (verb, k)
+        elif k in sets:
+            assert child.get(k), (verb, k)
+        else:
+            assert child.get(k) == parent[k], (verb, k)
+    # and the stream's fence still fires through the commit
+    head = snap.current_version(d)
+    w = _sink_writer(d, writer_id="pipe-a")
+    w.commit([w.write(iter([(2, "1", 4, 2)]))], batchId=7)
+    assert snap.current_version(d) == head  # replay dropped, no new version
 
 
 def test_expire_after_gapped_history(spark, tmp_path):
